@@ -197,3 +197,31 @@ def empty_dir(spark, sf_dir, tmp_path_factory):
 def test_operator_survives_empty_tables(spark, empty_dir, name):
     df = all_specs()[name].fn(spark, empty_dir)
     assert df.count() >= 0  # plans and executes; no exception
+
+
+def test_bitmap_intersect_matches_oracle_on_empty_tables(spark, empty_dir):
+    """Empty ``orders`` gives the oracle's one summary row: counts are
+    0, and the bitmap popcount (a SUM over no shared words) and its
+    agreement flag are NULL. Compared as Python tuples: pandas renders
+    a NULL boolean as None from Spark but NaN from DuckDB, which
+    tests/compare.compare would report as a value difference."""
+    import duckdb
+
+    spec = all_specs()["bitmap_index_intersect"]
+    df = spec.fn(spark, empty_dir)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM '{empty_dir}/orders.parquet/*.parquet'"
+    )
+    oracle = con.execute(f"SELECT {', '.join(df.columns)} FROM ({spec.oracle})")
+    duck_rows = oracle.fetchall()
+    con.close()
+    spark_rows = [tuple(r) for r in df.collect()]
+    assert spark_rows == duck_rows == [(0, 0, 0, None, 0, None)]
+
+
+def test_unstatable_source_warns_and_spreads_wide(tmp_path):
+    from transit_data_pipeline_spark.catalog import _source_bytes
+
+    with pytest.warns(UserWarning, match="missing.parquet"):
+        assert _source_bytes(str(tmp_path), "missing") == 1 << 60

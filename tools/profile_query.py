@@ -58,19 +58,7 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_NO_MIRROR", "") != "1":
         sf_dir = bench._mirror_fixtures(spark, sf_dir)
 
-    # Same warmups as bench.py: JVM/parquet, Python worker pool.
-    specs["perf_ranking_trends"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    def _noop_pdf(it):
-        yield from it
-
-    spark.range(256).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_noop_pdf, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    bench.warm_up(spark, sf_dir)
 
     sc = spark.sparkContext
     results = {}

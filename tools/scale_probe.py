@@ -23,6 +23,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import _newest_mtime  # noqa: E402
 from transit_data_pipeline_spark.operators.registry import all_specs  # noqa: E402
 from transit_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -56,16 +57,6 @@ DEFAULT = [
 ]
 
 
-def _src_mtime(path: str) -> float:
-    """Newest mtime under a parquet file OR directory-of-parts."""
-    if os.path.isdir(path):
-        times = [os.path.getmtime(path)]
-        for root, _dirs, files in os.walk(path):
-            times += [os.path.getmtime(os.path.join(root, f)) for f in files]
-        return max(times)
-    return os.path.getmtime(path)
-
-
 def build_xn(spark, factor: int, base: str = SF) -> str:
     """Materialize the ×factor corpus: every row duplicated `factor`
     times with its id column shifted by i·(max_id+1), content
@@ -90,7 +81,7 @@ def build_xn(spark, factor: int, base: str = SF) -> str:
         out = os.path.join(xdir, f"{t}.parquet")
         src_path = os.path.join(base, f"{t}.parquet")
         if os.path.exists(out):
-            if _src_mtime(out) >= _src_mtime(src_path):
+            if _newest_mtime(out) >= _newest_mtime(src_path):
                 continue
             # source regenerated after the cache was built → rebuild
             if os.path.isdir(out):

@@ -9,12 +9,11 @@ can `broadcast()` them (SURVEY §4: "broadcast the six dims").
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: All driver-provided tables (TESTDATA.md).
 TABLES = (
@@ -67,7 +66,7 @@ def table(
     if spread:
         dp = max(spark.sparkContext.defaultParallelism, 8)
         # Scale-adaptive spread width (r11, brief §2): one task per
-        # ~4 MB of on-disk input (env SPARK_GRAFT_SPREAD_TASK_BYTES),
+        # ~4 MB of on-disk input (SPREAD_TASK_BYTES),
         # floor 8, capped at cluster width. The old target was bare
         # defaultParallelism — a pure core-count constant that
         # splintered every CPU-heavy map over a sub-MB corpus into 32
@@ -86,15 +85,14 @@ def table(
 
 #: Per-task input quantum for `spread` repartitions (bytes of on-disk
 #: parquet; the raw text behind it is ~3-5x larger).
-SPREAD_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", 4 * 1024 * 1024)
-)
+SPREAD_TASK_BYTES = 4 * 1024 * 1024
 
 
 def _source_bytes(sf_dir: str, name: str) -> int:
     """On-disk bytes of one table (file or directory of part files).
-    Falls back to a huge value (=> spread to full cluster width) when
-    the path is not os-stat-able (e.g. a remote filesystem URI)."""
+    Falls back to a huge value (=> spread to full cluster width), with
+    a warning naming the path, when the path is not os-stat-able (e.g.
+    a remote filesystem URI)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
@@ -105,6 +103,10 @@ def _source_bytes(sf_dir: str, name: str) -> int:
             )
         return os.path.getsize(path)
     except OSError:
+        warnings.warn(
+            f"cannot stat {path}; spreading it to full cluster width",
+            stacklevel=2,
+        )
         return 1 << 60
 
 

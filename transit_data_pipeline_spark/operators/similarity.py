@@ -671,10 +671,6 @@ def retrieval_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataF
     return scored.withColumn("rnk", F.row_number().over(w))
 
 
-#: Power-iteration count for the principal-component extraction.
-_PCA_ITERS = 2
-
-
 def _sql_fold_sq(arr: str) -> str:
     return (
         f"list_reduce(list_transform({arr}, x -> x * x), (acc, x) -> acc + x)"

@@ -815,14 +815,6 @@ def moments_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Sources compared by the KMV intersection estimator (pairs grid is
-#: |S|·(|S|−1)/2; five sources → 10 pairs keeps the demo output small —
-#: the plan is identical for any source count).
-_KI_SOURCES = ("src0", "src1", "src2", "src3", "src4")
-_KI_K = 64
-
-
-
 #: Sources compared by the KMV intersection estimator. The pair grid is
 #: |S|·(|S|−1)/2 — five sources → 10 pairs keeps the demo output small;
 #: the plan shape is identical for any source count.

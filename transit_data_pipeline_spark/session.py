@@ -27,15 +27,11 @@ RUNTIME_CONF = {
     # (VERDICT r10 item 1; guide §2.2 "fewer, larger reduce
     # partitions"). Scale-adaptive by construction: partition count is
     # derived from shuffle bytes / advisory size at any scale, capped
-    # above by spark.sql.shuffle.partitions. Advisory size is
-    # env-tunable; 64m (Spark's default) suits the local bench, 256m
-    # is the guide-§9 production setting for big clusters.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": os.environ.get(
-        "SPARK_GRAFT_PARALLELISM_FIRST", "false"
-    ),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-        "SPARK_GRAFT_ADVISORY_PARTITION", "64m"
-    ),
+    # above by spark.sql.shuffle.partitions. 64m (Spark's default
+    # advisory size) suits the local bench; 256m is the guide-§9
+    # production setting for big clusters.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Exact ANSI-ish semantics are not required; reference relies on
     # permissive casts (SURVEY §2 P9).
